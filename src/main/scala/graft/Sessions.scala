@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Session sizing + inter-key hygiene shared by the three mains
-  * (Bench / Verify / Explain). Each main keeps its own builder — the
-  * per-conf rationale comments at those sites are load-bearing — but the
-  * two DATA-dependent pieces live here so they can be spec-pinned once.
+/** Session sizing, inter-key hygiene and per-key metering shared by the
+  * three mains (Bench / Verify / Explain). The one session builder,
+  * with its per-conf rationale, is [[Bench.session]]; the DATA-dependent
+  * sizing it uses lives here so it can be spec-pinned once.
   */
 object Sessions {
   /** Data-driven AQE start parallelism (r16, VERDICT r15 task 3).
@@ -50,6 +50,24 @@ object Sessions {
     } else if (f.getName.endsWith(".parquet")) f.length
     else 0L
 
+  /** Silence two benign-but-flooding executor warnings (r17, VERDICT r16
+    * noise item): every audited unpartitioned window in the registry sits
+    * on a domain-bounded post-aggregate (PlanSpec's single-partition
+    * sweep is the structural guarantee), yet WindowExec warns per plan —
+    * hundreds of lines per Verify/test run that bury real warnings; the
+    * DistRank localCheckpoint unpersist warning is likewise by-design
+    * (each key rebuilds its own blocks). Log level only — no behavior
+    * change. Called by the mains after setLogLevel. */
+  def quietBenignWarnings(): Unit =
+    try {
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        org.apache.logging.log4j.Level.ERROR)
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        org.apache.logging.log4j.Level.ERROR)
+    } catch { case scala.util.control.NonFatal(_) => () }
+
   /** Inter-key executor-state hygiene (r16, VERDICT r15 task 2).
     *
     * A 187-key suite leaves two kinds of litter in the block manager
@@ -71,31 +89,85 @@ object Sessions {
     *    full STW pause ×561 samples, and at fixture SF the litter never
     *    accumulates enough to matter (anchor timings stay untouched).
     *
-    * Runs OUTSIDE every timed region (Bench calls it before each
-    * sample's t0; Verify between key writes).
+    * Runs OUTSIDE every timed region (Bench and Explain call it before
+    * each sample's t0; Verify between key writes).
     */
-  /** Silence two benign-but-flooding executor warnings (r17, VERDICT r16
-    * noise item): every audited unpartitioned window in the registry sits
-    * on a domain-bounded post-aggregate (PlanSpec's single-partition
-    * sweep is the structural guarantee), yet WindowExec warns per plan —
-    * hundreds of lines per Verify/test run that bury real warnings; the
-    * DistRank localCheckpoint unpersist warning is likewise by-design
-    * (each key rebuilds its own blocks). Log level only — no behavior
-    * change. Called by the mains after setLogLevel. */
-  def quietBenignWarnings(): Unit =
-    try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD",
-        org.apache.logging.log4j.Level.ERROR)
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   def releaseKeyState(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     val rt = Runtime.getRuntime
     if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
   }
+
+  /** Wait until the listener bus has delivered every event posted so far,
+    * so one key's [[KeyMeter]] counters never bleed into the next.
+    * LiveListenerBus#waitUntilEmpty is private[spark], reached
+    * reflectively; if it moves, a fixed sleep makes attribution
+    * approximate. NonFatal only: an OOM or interrupt must surface. */
+  def drain(spark: SparkSession): Unit =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(150) }
+}
+
+/** The one listener of the mains: cumulative job/stage/task, shuffle and
+  * spill counters that a caller diffs across a sample ([[Sessions.drain]]
+  * first), plus, when `keepStages`, one row per completed stage for
+  * Explain's per-stage tables. It only counts; it never changes a plan. */
+final class KeyMeter(keepStages: Boolean = false)
+    extends org.apache.spark.scheduler.SparkListener {
+  import java.util.concurrent.atomic.AtomicLong
+  import org.apache.spark.scheduler.{SparkListenerJobStart,
+    SparkListenerStageCompleted}
+  private val jobs, stages, tasks, shuffleWrite, shuffleRead, diskSpill,
+    memorySpill = new AtomicLong
+  private val stageRows =
+    new java.util.concurrent.ConcurrentLinkedQueue[KeyMeter.Stage]
+
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    jobs.incrementAndGet()
+
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    val si = sc.stageInfo
+    stages.incrementAndGet()
+    tasks.addAndGet(si.numTasks)
+    val m = si.taskMetrics
+    if (m != null) {
+      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      diskSpill.addAndGet(m.diskBytesSpilled)
+      memorySpill.addAndGet(m.memoryBytesSpilled)
+      if (keepStages) stageRows.add(KeyMeter.Stage(si.stageId, si.name,
+        si.numTasks, m.executorRunTime, m.executorCpuTime,
+        m.inputMetrics.bytesRead, m.diskBytesSpilled, m.memoryBytesSpilled,
+        m.shuffleWriteMetrics.bytesWritten))
+    }
+  }
+
+  def snapshot(): KeyMeter.Counts = KeyMeter.Counts(jobs.get, stages.get,
+    tasks.get, shuffleWrite.get, shuffleRead.get, diskSpill.get,
+    memorySpill.get)
+
+  /** The stage rows recorded since the previous call, oldest first. */
+  def takeStages(): Seq[KeyMeter.Stage] =
+    Iterator.continually(stageRows.poll()).takeWhile(_ != null).toSeq
+}
+
+object KeyMeter {
+  final case class Counts(jobs: Long, stages: Long, tasks: Long,
+      shuffleWrite: Long, shuffleRead: Long, diskSpill: Long,
+      memorySpill: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, shuffleWrite - o.shuffleWrite,
+      shuffleRead - o.shuffleRead, diskSpill - o.diskSpill,
+      memorySpill - o.memorySpill)
+  }
+
+  /** One completed stage: executor run time in ms, CPU time in ns (as
+    * Spark's TaskMetrics report them), bytes otherwise. */
+  final case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
+      cpuNs: Long, inputBytes: Long, diskSpill: Long, memorySpill: Long,
+      shuffleWrite: Long)
 }

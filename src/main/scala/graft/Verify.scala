@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,71 +10,22 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // A typo'd filter that matches nothing would dump zero keys and exit
-    // 0 — fail loudly instead (code-review r10).
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"key filter names unknown keys: ${unknown.mkString(", ")}")
-    }
     // GRAFT_VERIFY_EXCLUDE=k1,k2 (r15, VERDICT r14 task 5): the
     // exactness-tier decision caps text_ngram_jaccard's tier at ~100x
     // (its 300x shuffle projection exceeds this host's disk), so sweeps
     // above that must drop the key WITHOUT enumerating the other 186 —
     // scale_sweep.sh sets this env. Excluded runs are marked filtered in
     // keys.json, exactly like an explicit include filter.
-    val exclude = sys.env.get("GRAFT_VERIFY_EXCLUDE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val exclude = Bench.envKeys("GRAFT_VERIFY_EXCLUDE")
       .getOrElse(Set.empty[String])
-    val unknownEx = exclude -- SparkEntry.queries.keySet
-    require(unknownEx.isEmpty,
-      s"GRAFT_VERIFY_EXCLUDE names unknown keys: ${unknownEx.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // HotSpot never JIT-compiles methods over 8000 bytecode bytes
-      // (DontCompileHugeMethods), while Spark's default fallback only
-      // trips at 65535 — stages whose generated whole-stage method lands
-      // in between run as INTERPRETED BYTECODE: vec_ann_ivfpq's fused
-      // candidate-scoring stage cost 30 s at 100x grown vs 2.8 s with
-      // the fallback aligned to the JIT's real limit (r14 task 7
-      // bisection). 8000 makes Spark fall back to per-operator execution
-      // exactly where the JIT would refuse anyway — strictly
-      // faster-or-neutral, results unchanged (execution strategy only).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // Data-scaled reduce parallelism (see Bench.scala): AQE coalesces
-      // back to small task counts at fixture SF; big sweeps get enough
-      // reducers to stay spill-free. r16: ceiling derived from the input
-      // footprint (Sessions.initialPartitions) — the fixed 8×cpus cap
-      // would re-bind per-reducer bytes to data above ~1000×.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Sessions.initialPartitions(sfDir, cpus.toInt,
-          sys.env.getOrElse("GRAFT_ADVISORY_MB", "16").toLong << 20).toString)
-      // 16 MB advisory reducer size (r15): the reduce-side sort holds
-      // 4-10x the compressed bytes in unsafe-row form; the default 64 MB
-      // spilled the 300x SMJ/as-of sorts under 32-way concurrency (see
-      // Bench for the full account).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_MB", "16") + "m")
-      // Storage-pool floor 0.25 (r15): the probe bench runs 14 keys in one
-      // session; earlier keys' not-yet-GC'd broadcasts sit in the storage
-      // pool, and the default storageFraction=0.5 protects up to half of
-      // unified memory from execution eviction — join_asof's 300x sort
-      // spilled in-suite (1.1 GB) while running spill-free solo. 0.25
-      // caps the unevictable litter; broadcasts evict to disk harmlessly.
-      .config("spark.memory.storageFraction", "0.25")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts physical-type handling (µs timestamp vs legacy INT64
-      // nanos) lives in Tables.events, which branches on the resolved
-      // schema — no session-wide legacy conf needed here.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.quietBenignWarnings()
-    // Native functions + rewrites (graft_dot, TopKPerGroup) active for the
-    // whole run — plan choice must not depend on query iteration order.
-    plans.GraftFunctions.register(spark)
+    // Key-set manifest (VERDICT r8 missing #2): r08's fixture drift made 19
+    // keys throw at plan time; the per-key catch below kept the dump alive
+    // but nothing downstream noticed the holes. Record registry/attempted/
+    // failed so preflight.py can hard-fail when ANY registry key is absent
+    // from the verified output instead of silently grading a subset.
+    val attempted = Bench.selectKeys(SparkEntry.queries.keySet, only,
+      exclude, "key filter", "GRAFT_VERIFY_EXCLUDE").toSeq.sorted
+    val spark = Bench.session(sfDir)
     // Confs whose declared DuckDB oracle is pinned to the default value:
     // running a correctness dump with a non-default override would make
     // the hash-checked key silently diverge from its oracle and read as
@@ -89,19 +39,6 @@ object Verify {
             "unset it for a correctness run")
     }
     new java.io.File(outDir).mkdirs()
-    // Key-set manifest (VERDICT r8 missing #2): r08's fixture drift made 19
-    // keys throw at plan time; the per-key catch below kept the dump alive
-    // but nothing downstream noticed the holes. Record registry/attempted/
-    // failed so preflight.py can hard-fail when ANY registry key is absent
-    // from the verified output instead of silently grading a subset.
-    val attempted = SparkEntry.queries.keys.toSeq
-      .filter(name => only.forall(_.contains(name)) && !exclude(name))
-      .sorted
-    // A filter and an exclude that are both individually valid can still
-    // intersect to zero keys (ADVICE r15) — a dump of nothing exiting 0
-    // would read downstream as a (vacuously) clean run.
-    require(attempted.nonEmpty,
-      "key filter + GRAFT_VERIFY_EXCLUDE select zero keys")
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     attempted.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -111,9 +48,6 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Dead localCheckpoints + GC-pending broadcasts from the finished
-      // key must not squat in the storage pool while the NEXT key builds
-      // its broadcasts (r16, VERDICT r15 task 2 — see Sessions).
       Sessions.releaseKeyState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

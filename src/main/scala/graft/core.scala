@@ -262,6 +262,18 @@ object Det {
   def dsumSnap(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(28, scale))).cast("double")
 
+  /** Driver-side twin of [[dsumSnap]]'s per-row snap, for literal
+    * arithmetic that must land on the same decimal (graph_pagerank's
+    * driver-run iteration). Spark casts a double to DECIMAL(28, s) via
+    * its shortest-repr string — the route BigDecimal.valueOf takes — and
+    * rounds HALF_UP; EdgeCaseSpec pins the two against each other. */
+  def snapDecimal(x: Double, scale: Int = 2): java.math.BigDecimal = {
+    val d = java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP)
+    require(d.precision <= 28, s"$x overflows DECIMAL(28, $scale)")
+    d
+  }
+
   /** [[dsum]] WITHOUT the final cast back to double — the result stays
     * the exact DECIMAL(38, s) sum. INTERNAL ACCUMULATION ONLY — rule D9
     * (SURVEY §2.0): a raw DECIMAL-typed column at the graded interface

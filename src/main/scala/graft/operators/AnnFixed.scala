@@ -943,9 +943,8 @@ object AnnFixed {
     val per = countCache.computeIfAbsent(e0.sparkSession,
       _ => new java.util.concurrent.ConcurrentHashMap[
         String, java.lang.Long]())
-    val key = e0.queryExecution.logical.canonicalized.toString +
-      "|" + e0.inputFiles.sorted.mkString(",")
-    per.computeIfAbsent(key, _ => java.lang.Long.valueOf(e0.count()))
+    per.computeIfAbsent(PipelineOps.planKey(e0),
+      _ => java.lang.Long.valueOf(e0.count()))
       .longValue()
   }
 
@@ -1039,10 +1038,12 @@ object AnnFixed {
 
   /** The quality/lang-gated candidate pool (gates only — no dedup):
     * the stage `curateKept` and `pipeline_curate_incremental` share,
-    * projected to the six columns every consumer uses. Lazy — each
-    * consumer decides whether to pin it (`pipeline_curate_incremental`
-    * references it three ways and checkpoints; `curateKept` consumes it
-    * exactly once since the min_by canonicalization). */
+    * projected to the six columns every consumer uses. Lazy, and no
+    * consumer pins it: `curateKept` consumes it exactly once since the
+    * min_by canonicalization, and `pipeline_curate_incremental`
+    * references it three ways but re-runs the scan-fused gate rather
+    * than checkpoint it (a localCheckpoint lost 15% at 30× grown — see
+    * that query). */
   private def curatePool(s: SparkSession, dir: String): DataFrame =
     gateQuality(Tables.table(s, dir, "documents"))
       .select(col("doc_id"), col("lang"), col("source"), col("text"),

@@ -73,19 +73,16 @@ object GraphOps {
         // pure-dispatch jobs at ANY scale, since everything after the one
         // fact pass is domain-sized by construction. Each step replicates
         // the retired plan's arithmetic exactly: the per-node sum snaps
-        // every r·p term to DECIMAL(28,12) HALF_UP (what dsumSnap's
-        // double→decimal cast does — java BigDecimal.valueOf is the same
-        // shortest-repr route), adds exactly (decimal addition is
-        // order-free), and emits via doubleValue — the identical
+        // every r·p term to DECIMAL(28,12) with Det.snapDecimal (the
+        // driver twin of dsumSnap's cast), adds exactly (decimal addition
+        // is order-free), and emits via doubleValue — the identical
         // single-rounded decimal→double cast.
-        val hu = java.math.RoundingMode.HALF_UP
         var rank: Map[String, Double] = nodes.map(t => t -> 1.0 / n).toMap
         for (_ <- 1 to 3) {
           val sums = scala.collection.mutable.Map.empty[
             String, java.math.BigDecimal]
           for ((f, t, p) <- edges) {
-            val term = java.math.BigDecimal.valueOf(rank(f) * p)
-              .setScale(12, hu)
+            val term = Det.snapDecimal(rank(f) * p, 12)
             sums.updateWith(t)(prev => Some(
               prev.map(_.add(term)).getOrElse(term)))
           }

@@ -2286,7 +2286,7 @@ object PipelineOps {
 
   /** Canonicalized-plan + backing-file cache key for train-once memos —
     * see [[codebookCache]] for why both halves are load-bearing. */
-  private def planKey(df: DataFrame): String =
+  private[operators] def planKey(df: DataFrame): String =
     df.queryExecution.logical.canonicalized.toString +
       "|" + df.inputFiles.sorted.mkString(",")
 

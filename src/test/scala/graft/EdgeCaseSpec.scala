@@ -97,6 +97,21 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(new java.math.BigDecimal(exact.doubleValue).compareTo(exact) != 0)
   }
 
+  test("Det.snapDecimal equals Spark's DECIMAL(28,12) cast at the edges") {
+    // graph_pagerank's driver-side iteration relies on this equality to
+    // reproduce dsumSnap's per-row snap: half-grid ties (positive and
+    // negative round HALF_UP, away from zero), a sub-grid value, and a
+    // magnitude that fills all 28 digits
+    val xs = Seq(5e-13, -5e-13, 2.5e-12, 1e-13, 1e15, 0.1 + 0.2)
+    val cast = xs.toDF("x").select(col("x").cast(DecimalType(28, 12)))
+      .collect().map(_.getDecimal(0)).toSeq
+    assert(xs.map(Det.snapDecimal(_, 12)) === cast)
+    assert(cast.take(4).map(_.toPlainString) === Seq("0.000000000001",
+      "-0.000000000001", "0.000000000003", "0.000000000000"))
+    // one digit more than DECIMAL(28,12) holds fails loudly
+    intercept[IllegalArgumentException](Det.snapDecimal(1e16, 12))
+  }
+
   test("graft_dot matches HOF semantics on nulls and unequal lengths") {
     graft.plans.GraftFunctions.register(spark)
     val schema = StructType(Seq(

@@ -22,6 +22,34 @@ object TestSpark {
   val sf = "/root/testdata/sf0.001"
 }
 
+/** Runs a graft main in a fresh JVM — for mains that stop their session,
+  * or whose SparkSession.builder confs must actually take — with this
+  * JVM's classpath and module flags, in `cwd`, under this environment
+  * plus `env` minus `unset`. Returns the exit code and the combined
+  * stdout + stderr. */
+object MainProcess {
+  import scala.jdk.CollectionConverters._
+
+  def run(main: String, args: Seq[String], cwd: java.nio.file.Path,
+      env: Map[String, String], unset: Seq[String]): (Int, String) = {
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(a =>
+        a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
+          a.startsWith("--enable-native-access"))
+    val pb = new ProcessBuilder((Seq("java", "-Xmx4g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), main) ++ args).asJava)
+    pb.directory(cwd.toFile)
+    pb.redirectErrorStream(true)
+    unset.foreach(pb.environment().remove)
+    pb.environment().putAll(env.asJava)
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes, "UTF-8")
+    require(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS),
+      s"subprocess $main did not finish in 10 min")
+    (p.exitValue, out)
+  }
+}
+
 /** Every registered query runs, is non-empty (R6), and re-runs identically
   * (total order ⇒ rerun-stable). */
 class RegistrySpec extends AnyFunSuite {

@@ -393,29 +393,14 @@ class ScaleGuardSpec extends AnyFunSuite {
     // (filtered, never the tracked anchor) and _meta records the confs
     // the session really used.
     val cwd = java.nio.file.Files.createTempDirectory("graft_benchenv")
-    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    import scala.jdk.CollectionConverters._
-    val opens = mx.asScala.filter(a =>
-      a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-        a.startsWith("--enable-native-access"))
-    val cmd = (Seq("java", "-Xmx4g") ++ opens ++ Seq(
-      "-cp", System.getProperty("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.directory(cwd.toFile)
-    pb.redirectErrorStream(true)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    env.put("SPARK_GRAFT_CPUS", "4")
-    env.put("GRAFT_ADVISORY_MB", "24")
-    env.put("GRAFT_BENCH_ONLY", "scan_parquet_count,project_arithmetic")
-    env.put("GRAFT_BENCH_EXCLUDE", "project_arithmetic")
-    env.remove("GRAFT_BENCH_DETAIL") // routing itself is under test
-    val p = pb.start()
-    val outLog = new String(p.getInputStream.readAllBytes, "UTF-8")
-    assert(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS),
-      "subprocess bench did not finish in 10 min")
-    assert(p.exitValue == 0, s"bench exited ${p.exitValue}:\n" +
+    val (exit, outLog) = MainProcess.run("graft.Bench", Nil, cwd, Map(
+      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
+      "SPARK_GRAFT_CPUS" -> "4",
+      "GRAFT_ADVISORY_MB" -> "24",
+      "GRAFT_BENCH_ONLY" -> "scan_parquet_count,project_arithmetic",
+      "GRAFT_BENCH_EXCLUDE" -> "project_arithmetic"),
+      unset = Seq("GRAFT_BENCH_DETAIL")) // routing itself is under test
+    assert(exit == 0, s"bench exited $exit:\n" +
       outLog.linesIterator.toSeq.takeRight(30).mkString("\n"))
     val detail = cwd.resolve("bench_detail_partial.json")
     assert(java.nio.file.Files.exists(detail),
